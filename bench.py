@@ -345,8 +345,8 @@ def main() -> None:
     # session to touch localCheckpoint/block-manager paths pays ~4-5s of
     # first-use cost wherever it sits in the order (dedup_minhash_keeplist
     # measured 9.1s on its session-first run vs 4.1s warm in the SAME
-    # session, tools/remeasure.py). A 3-edge connected-components pass
-    # warms exactly that path for ~1s, unbilled.
+    # session). A 3-edge connected-components pass warms exactly that path
+    # for ~1s, unbilled.
     try:
         from polars_numba_spark.operators.dedup import connected_components
 

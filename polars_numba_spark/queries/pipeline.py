@@ -1118,10 +1118,6 @@ def _exact_pairs_capped(
     )
     a = e.alias("a")
     b = e.alias("b")
-    # r15: all-pairs scoring via the batch NumPy kernel (bit-exact twin of
-    # cosine_with_norms — similarity._pair_cosine_arrow) instead of one
-    # interpreted fold per pair: at cap=1000 this is ~500k interpreted
-    # aggregate(zip_with) evaluations replaced by vectorized batch dots.
     pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
         F.col("a.vec_id").alias("a_id"),
         F.col("b.vec_id").alias("b_id"),
@@ -1130,7 +1126,7 @@ def _exact_pairs_capped(
         F.col("a.nv").alias("an"),
         F.col("b.nv").alias("bn"),
     )
-    return S._pair_cosine_arrow(pairs, "av", "bv", "an", "bn").where(
+    return S._pair_cosine(pairs, "av", "bv", "an", "bn").where(
         F.col("cosine_sim") >= threshold
     )
 
@@ -4243,7 +4239,7 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_nearest_centroid,
         kmeans_iterations,
     )
-    from polars_numba_spark.operators.similarity import cosine_with_norms, norm
+    from polars_numba_spark.operators.similarity import norm
     from polars_numba_spark.operators.vector import as_double
 
     e = _t(spark, sf_dir, "embeddings")
@@ -4257,9 +4253,7 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = cent1.select(
         F.col("label").alias("__cid"), as_double("centroid").alias("__cv")
     ).withColumn("__cn", norm(F.col("__cv")))
-    # r15: the n×k scoring pass runs through the batch NumPy pair kernel
-    # (bit-exact twin of cosine_with_norms); the 9dp round stays in-plan.
-    scored = S._pair_cosine_arrow(
+    scored = S._pair_cosine(
         e.select("vec_id", as_double("embedding").alias("__v"))
         .withColumn("__vn", norm(F.col("__v")))
         .crossJoin(F.broadcast(c))

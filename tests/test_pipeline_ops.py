@@ -5,6 +5,8 @@ consistency on the sf0.001 tables.
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -366,6 +368,95 @@ def test_lsh_arrow_buckets_match_expression_path(spark):
     assert expr == arrow
     # the NaN row must carry ALL sign bits (Spark NaN > 0), not zero
     assert arrow[(900006, 0)] == 15
+
+
+def _adversarial(spark):
+    rows = [
+        (900001, None),
+        (900002, []),                   # empty: ragged vs every other row
+        (900003, [1.0] * 32),           # ragged vs dim-64 rows
+        (900004, [1.0] * 80),
+        (900005, [None if i == 7 else 0.001 for i in range(64)]),
+        (900006, [float("nan") if i == 3 else 0.5 for i in range(64)]),
+        (900008, [float("inf") if i == 9 else -0.25 for i in range(64)]),
+        (900009, [-0.5] * 64),
+        (900010, [1e160] * 64),          # norm product overflows to inf
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _as_key(x):
+    if x is None:
+        return "NULL"
+    if isinstance(x, float) and math.isnan(x):
+        return "NaN"
+    return repr(x)
+
+
+def test_bucket_kernel_norm_matches_expression(spark):
+    """__norm emitted by _with_bucket_array(with_norm=True) must equal the
+    interpreted norm() for every row class — including ragged rows (norm is
+    over the row's OWN length, valid even when the bucket projection isn't)
+    and null-element rows (NULL norm)."""
+    full = (
+        embeddings(spark)
+        .select("vec_id", "embedding")
+        .limit(60)
+        .unionByName(_adversarial(spark))
+    )
+    expr = {
+        r["vec_id"]: _as_key(r["n"])
+        for r in full.select(
+            "vec_id", S.norm(S.as_double("embedding")).alias("n")
+        ).collect()
+    }
+    kern = {
+        r["vec_id"]: _as_key(r["__norm"])
+        for r in S._with_bucket_array(
+            full, "embedding", 64, 4, 8, with_norm=True
+        )
+        .select("vec_id", "__norm")
+        .collect()
+    }
+    assert kern == expr
+    assert expr[900003] != "NULL"   # ragged row still has its own norm
+    assert expr[900005] == "NULL"   # null element → NULL norm
+
+
+def _pair_frame(base):
+    e = base.select(
+        F.col("vec_id").alias("id"), S.as_double("embedding").alias("v")
+    ).withColumn("nv", S.norm(F.col("v")))
+    a = e.select(
+        F.col("id").alias("a_id"), F.col("v").alias("av"), F.col("nv").alias("an")
+    )
+    b = e.select(
+        F.col("id").alias("b_id"), F.col("v").alias("bv"), F.col("nv").alias("bn")
+    )
+    return a.join(b, F.col("a_id") < F.col("b_id"))
+
+
+def test_cosine_with_norms_zero_norm_raises_like_ansi(spark):
+    """A zero-norm vector scored against a real one raises (Spark 4 ANSI
+    double division by zero) instead of emitting IEEE inf/NaN."""
+    rows = [(1, [0.0] * 8), (2, [1.0] * 8)]
+    base = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    pairs = _pair_frame(base)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        pairs.select(
+            S.cosine_with_norms(
+                F.col("av"), F.col("bv"), F.col("an"), F.col("bn")
+            ).alias("c")
+        ).collect()
+
+
+def test_pair_cosine_empty_input(spark):
+    """_pair_cosine consumes the vector and norm columns and keeps the
+    rest, in order, plus the score column."""
+    base = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    out = S._pair_cosine(_pair_frame(base), "av", "bv", "an", "bn")
+    assert out.count() == 0
+    assert out.columns == ["a_id", "b_id", "cosine_sim"]
 
 
 def test_lsh_topk_recall_vs_bruteforce(spark):

@@ -322,3 +322,31 @@ def test_pq_codebooks_encode_and_adc_shapes(spark):
     q = df.where(F.col("vec_id") < 3)
     top = pq_adc_topk(codes, q, books, k=1, m=2).collect()
     assert len(top) == 3 and all(r["cosine_sim"] <= 1.0 + 1e-9 for r in top)
+
+
+def test_pq_assign_ties_and_null_win_semantics(spark):
+    """Hand-built cases where Spark's struct-MIN semantics decide the PQ
+    argmin: ties go to the lowest code, a NULL distance sorts lowest and
+    wins, and a subspace with no centroids drops the row (inner join)."""
+    from polars_numba_spark.operators import vector as V
+    from polars_numba_spark.operators.similarity import sumsq
+
+    subs = spark.createDataFrame(
+        [
+            (1, 0, [1.0, 0.0]),     # exact tie between codes 5 and 7
+            (2, 0, [1.0] * 3),      # ragged vs BOTH centroids -> null d2 wins at code 5
+            (3, 1, [1.0, 1.0]),     # subspace 1 has no centroids -> row dropped
+        ],
+        "id long, s int, subvec array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, 7, [2.0, 0.0]), (0, 5, [2.0, 0.0])],
+        "s int, __code int, __cv array<double>",
+    ).withColumn("__cn2", sumsq(F.col("__cv")))
+    got = {
+        (r["id"], r["s"]): r["code"]
+        for r in V._pq_assign(subs, cents, carry_vec=False, round_to=9).collect()
+    }
+    assert got[(1, 0)] == 5          # tie -> lowest code
+    assert got[(2, 0)] == 5          # null d2 wins the MIN, lowest code
+    assert (3, 1) not in got         # inner-join drop
