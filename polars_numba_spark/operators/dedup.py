@@ -517,8 +517,8 @@ def _prefix_probe_tables(
     ``(occ, prefixes, stage_width, par, toks)``.
 
     The tokenized corpus (id, toks, n_toks) is materialized ONCE via a
-    session-scoped checkpoint and shared with every downstream consumer
-    (occ/dfreq/rarity-sort here, index/members in the callers, and the
+    checkpoint and shared with every downstream consumer (occ/dfreq/
+    rarity-sort here, index/members in the callers, and the
     verify's ``_joined_pair_sets`` via the returned handle). This
     re-audits — and OVERTURNS — the r8 rejection of exactly this
     materialization under the post-r14 economics (scan-parallelize,
@@ -527,19 +527,15 @@ def _prefix_probe_tables(
     dedup_containment_keeplist 5.81s/21.8 → 1.82s/11.3. The SSJoin plan
     re-tokenizes the corpus FIVE times (occ, dfreq via occ, rarity sort,
     and both verify sides) — the checkpoint pays one tokenize + one
-    small materialization instead. ``PNS_CONTAINMENT_CKPT=0`` opts out
-    (restores the pure-lineage plan for lineage-recovery-sensitive
-    clusters that also decline PNS_CHECKPOINT_MODE=reliable).
+    small materialization instead.
     """
-    import os
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
-    toks = df.select(
-        F.col(id_col).alias("id"), _token_sets(text_col, shingle_n).alias("toks")
-    ).withColumn("n_toks", F.size("toks"))
-    if os.environ.get("PNS_CONTAINMENT_CKPT", "1") != "0":
-        from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
-
-        toks = session_scoped_checkpoint(toks)
+    toks = checkpoint(
+        df.select(
+            F.col(id_col).alias("id"), _token_sets(text_col, shingle_n).alias("toks")
+        ).withColumn("n_toks", F.size("toks"))
+    )
     occ = toks.select("id", F.explode("toks").alias("tok"))
     dfreq = occ.groupBy("tok").agg(F.count(F.lit(1)).alias("__df"))
     # Adaptive width, shared by the TWO corpus-mass stages (VERDICT r8 #4):
@@ -713,8 +709,6 @@ def minhash_dedup_pairs(
     if emit != "pairs":
         raise ValueError(f"emit must be 'pairs' or 'keeplist', got {emit!r}")
     toks = None
-    import os
-
     # The pipeline derives the token/shingle sets THREE times (signature
     # explode + both verify sides). For SHINGLE sets that derivation is
     # the dominant cost — every pass re-runs tokenize → n-gram concat →
@@ -725,13 +719,11 @@ def minhash_dedup_pairs(
     # distinct-token derivation is ~0.5s and the checkpoint's
     # materialize+read costs more than it saves), so the default is
     # shingle-only. Results identical by construction — both paths
-    # explode/join the same per-doc set. PNS_MINHASH_TOKS_CKPT=1/0
-    # forces on/off.
-    knob = os.environ.get("PNS_MINHASH_TOKS_CKPT")
-    if knob == "1" or (knob != "0" and shingle_n is not None):
-        from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    # explode/join the same per-doc set.
+    if shingle_n is not None:
+        from polars_numba_spark.plans.checkpoint import checkpoint
 
-        toks = session_scoped_checkpoint(
+        toks = checkpoint(
             df.select(
                 F.col(id_col).alias("id"),
                 _token_sets(text_col, shingle_n).alias("toks"),
@@ -962,11 +954,11 @@ def simhash_dedup_pairs(
     #    blocks ReuseExchange, so both sides re-ran the whole
     #    tokenize→hash→sign-agg pipeline (visible as two full aggregate
     #    chains in plans/r15/dedup_simhash_pairs_before.txt). A
-    #    session-scoped checkpoint halves the signature build: → 2.89s.
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    #    checkpoint halves the signature build: → 2.89s.
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     par = df.sparkSession.sparkContext.defaultParallelism
-    e = session_scoped_checkpoint(
+    e = checkpoint(
         e.repartition(_adaptive_verify_width(df, par), "blk")
     )
     a = e.alias("a")
@@ -1008,13 +1000,8 @@ def connected_components(
     SQL-expressible as one query, hence driver-checked rows-only and pinned
     by structural tests instead.
     """
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint, release
 
-    spark = edges.sparkSession
     sym_plan = (
         edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .union(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
@@ -1024,13 +1011,13 @@ def connected_components(
     # this the lazy plan re-derives the ENTIRE upstream pair pipeline
     # (minhash signatures → LSH band join → jaccard verify) per round —
     # the dominant cost of clustering at any scale.
-    sym, sym_ids = tracked_local_checkpoint(sym_plan)
+    sym = checkpoint(sym_plan)
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
     )
-    prev_ids: set[int] = set()
+    ckpt = labels
     converged = False
     for _ in range(max_iterations):
         neighbor_min = (
@@ -1051,16 +1038,16 @@ def connected_components(
         # truncate lineage; round N-1's blocks are superseded the moment
         # round N materializes — free them (round-2 verdict: accumulated
         # checkpoint blocks are a memory-pressure risk at 100×)
-        new_labels, new_ids = tracked_local_checkpoint(new_labels)
-        release(spark, prev_ids)
-        prev_ids = new_ids
-        n_changed = new_labels.where(F.col("changed")).count()
-        labels = new_labels.drop("changed")
+        prev, ckpt = ckpt, checkpoint(new_labels)
+        release(prev)
+        n_changed = ckpt.where(F.col("changed")).count()
+        labels = ckpt.drop("changed")
         if n_changed == 0:
             converged = True
             break
     if not converged:
-        release(spark, sym_ids | prev_ids)
+        # the checkpoints stay registered: release_session_checkpoints
+        # sweeps them like any other
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "iterations (graph diameter exceeds the cap); raise "
@@ -1070,8 +1057,7 @@ def connected_components(
     # the final labels checkpoint is read lazily by the caller's plan; its
     # blocks are swept between queries (bench/gate hygiene), not here. The
     # edge set is no longer referenced — free it now.
-    release(spark, sym_ids)
-    register_session_scoped(prev_ids)
+    release(sym)
     return labels
 
 

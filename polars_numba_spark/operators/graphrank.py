@@ -17,7 +17,7 @@ ranks match Spark's hash-for-hash.
 Scale shape: one iteration = one equi-join of the edge list against the
 rank vector plus one groupBy on the destination node — both shuffles key
 on node id, AQE sizes the exchanges, and the edge list is materialized
-once via tracked localCheckpoint so round N does not re-derive the graph
+once via an eager checkpoint so round N does not re-derive the graph
 construction N times (the same lineage trap connected_components pins).
 No driver-side state beyond the Python loop counter; no collect.
 """
@@ -45,22 +45,17 @@ def pagerank(
     convergence test: determinism and the unrolled SQL oracle both need
     the round count to be data-independent.
     """
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint, release
 
-    spark = edges.sparkSession
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    e, e_ids = tracked_local_checkpoint(e)
+    e = checkpoint(e)
 
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes, n_ids = tracked_local_checkpoint(nodes)
+    nodes = checkpoint(nodes)
     outdeg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("outdeg")
     )
@@ -74,15 +69,15 @@ def pagerank(
     e_deg = e.join(outdeg, e.src == outdeg.node).select(
         "src", "dst", "outdeg"
     )
-    e_deg, ed_ids = tracked_local_checkpoint(e_deg)
-    release(spark, e_ids)  # the raw edge set is no longer read by the loop
+    e_deg = checkpoint(e_deg)
+    release(e)  # the raw edge set is no longer read by the loop
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("__n"))
 
     ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
         "node", F.round(F.lit(1.0) / F.col("__n"), 12).alias("rank")
     )
-    rank_ids: set[int] = set()
     for _ in range(iterations):
+        prev = ranks
         contribs = (
             e_deg.join(ranks, e_deg.src == ranks.node)
             .select(
@@ -110,13 +105,11 @@ def pagerank(
         # k copies of the join tree and Catalyst analysis goes quadratic.
         # The new checkpoint is EAGER, so the superseded round's blocks can
         # be freed immediately (the block-manager leak checkpoint.py pins).
-        ranks, new_ids = tracked_local_checkpoint(ranks)
-        release(spark, rank_ids)
-        rank_ids = new_ids
+        ranks = checkpoint(ranks)
+        release(prev)
     # the returned frame reads only the FINAL rank blocks: graph-side
     # checkpoints are free now; the final blocks are swept between queries
-    release(spark, ed_ids | n_ids)
-    register_session_scoped(rank_ids)
+    release(e_deg, nodes)
     return ranks
 
 
@@ -144,20 +137,15 @@ def bfs_hops(
     embed k join trees). ``max_hops`` is a fixed bound, not a convergence
     test, so the loop unrolls into a bounded recursive-CTE oracle.
     Integer hop arithmetic — nothing to round, every engine agrees."""
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint, release
 
-    spark = edges.sparkSession
     e = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    e, e_ids = tracked_local_checkpoint(e)
+    e = checkpoint(e)
 
     visited = seeds.select(
         F.col(seed_col).alias("id"), F.lit(0).cast("int").alias("hops")
     )
-    visited, v_ids = tracked_local_checkpoint(visited)
+    visited = checkpoint(visited)
     frontier = visited
     for h in range(1, max_hops + 1):
         nxt = (
@@ -167,13 +155,10 @@ def bfs_hops(
             .join(visited.select("id"), "id", "left_anti")
             .select("id", F.lit(h).cast("int").alias("hops"))
         )
-        visited = visited.unionByName(nxt)
-        visited, new_ids = tracked_local_checkpoint(visited)
-        release(spark, v_ids)
-        v_ids = new_ids
+        prev, visited = visited, checkpoint(visited.unionByName(nxt))
+        release(prev)
         frontier = visited.where(F.col("hops") == h)
-    release(spark, e_ids)
-    register_session_scoped(v_ids)
+    release(e)
     return visited
 
 
@@ -204,23 +189,16 @@ def hits(
     both shuffles key on node id; the L1 total is a broadcast 1-row
     aggregate. The edge list is localCheckpointed once and reused by all
     2·iterations half-steps."""
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint, release
 
-    spark = edges.sparkSession
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    e, e_ids = tracked_local_checkpoint(e)
+    e = checkpoint(e)
 
     srcs = e.select("src").distinct()
     n_src = srcs.agg(F.count(F.lit(1)).alias("__n"))
     hubs = srcs.crossJoin(F.broadcast(n_src)).select(
         "src", F.round(F.lit(1.0) / F.col("__n"), 12).alias("hub")
     )
-    hub_ids: set[int] = set()
-    auth_ids: set[int] = set()
     auths = None
     for _ in range(iterations):
         a_raw = (
@@ -233,6 +211,7 @@ def hits(
             )
         )
         a_tot = a_raw.agg(F.sum("__ar").alias("__t"))
+        prev = auths
         auths = a_raw.crossJoin(F.broadcast(a_tot)).select(
             "dst",
             F.round(
@@ -240,15 +219,16 @@ def hits(
                 12,
             ).alias("auth"),
         )
-        auths, new_a = tracked_local_checkpoint(auths)
-        release(spark, auth_ids)
-        auth_ids = new_a
+        auths = checkpoint(auths)
+        if prev is not None:
+            release(prev)
         h_raw = (
             e.join(auths, "dst")
             .groupBy("src")
             .agg(F.sum(F.col("auth").cast("decimal(28,14)")).alias("__hr"))
         )
         h_tot = h_raw.agg(F.sum("__hr").alias("__t"))
+        prev = hubs
         hubs = h_raw.crossJoin(F.broadcast(h_tot)).select(
             "src",
             F.round(
@@ -256,11 +236,9 @@ def hits(
                 12,
             ).alias("hub"),
         )
-        hubs, new_h = tracked_local_checkpoint(hubs)
-        release(spark, hub_ids)
-        hub_ids = new_h
-    release(spark, e_ids)
-    register_session_scoped(hub_ids | auth_ids)
+        hubs = checkpoint(hubs)
+        release(prev)
+    release(e)
     return (
         hubs.select(F.col("src").alias("node"), "hub"),
         auths.select(F.col("dst").alias("node"), "auth"),

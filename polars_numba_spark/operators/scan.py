@@ -185,16 +185,11 @@ def _parallel_prefix_scan(
     # storage) so pass 1's partials line up with pass 2's partitions. At
     # cluster scale this is one extra write of the working set, the price of
     # turning a one-task scan into an n-task scan. The blocks are read
-    # lazily by the RETURNED DataFrame, so they are registered session-
-    # scoped and swept between queries by the bench/gate harness instead of
-    # leaking for the session's lifetime (round-2 verdict hygiene item).
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        tracked_local_checkpoint,
-    )
+    # lazily by the RETURNED DataFrame, so they stay registered until
+    # release_session_checkpoints sweeps them between queries.
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
-    prepared, _ckpt_ids = tracked_local_checkpoint(prepared)
-    register_session_scoped(_ckpt_ids)
+    prepared = checkpoint(prepared)
     col_idx = {c: i for i, c in enumerate(prepared.columns)}
 
     def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -257,10 +257,10 @@ def kneser_ney_logprob_scores(
     aggregate over the bigram-type table (context/continuation type
     counts) — all keyed on vocabulary, joined back broadcast by default.
 
-    r14 note: materializing the bigram-type table ``c2`` here (tracked
-    session-scoped checkpoint, so ctx/cont/btot derive from the
-    materialized rows instead of each broadcast build replaying the
-    corpus explode + lag-window sort — the captured before-plan holds
+    r14 note: materializing the bigram-type table ``c2`` here (an eager
+    checkpoint, so ctx/cont/btot derive from the materialized rows
+    instead of each broadcast build replaying the corpus explode +
+    lag-window sort — the captured before-plan holds
     that subtree FIVE times) was tried and REVERTED on measurement:
     quiet-host floors read wall 1.45 → 1.75s / CPU 9.0 → 10.5 cpu-s
     AGAINST the checkpoint at sf0.1 (a contended earlier round had
@@ -360,22 +360,19 @@ def winnowing_overlap_pairs(
     stop-fingerprints (appearing in more than ``hot_df_cap`` documents —
     boilerplate) removed by a broadcast anti-join BEFORE the join can
     square them — the standard MOSS cut. The fingerprint arrays are
-    materialized through a session-scoped localCheckpoint first: inlined
-    under explode, the md5-in-HOF winnowing expression leaves whole-stage
+    materialized through an eager checkpoint first: inlined under
+    explode, the md5-in-HOF winnowing expression leaves whole-stage
     codegen and runs interpreted (measured 100s+ vs ~2s at sf0.1 — the
     repo-wide interpreted-Generate rule).
 
     Returns (a_id, b_id, n_fp_a, n_fp_b, shared_fp, overlap)."""
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
-    fp_plan = winnowing_fingerprints(
-        df, text_col=text_col, id_col=id_col, k=k, w=w, portable=portable
+    fp = checkpoint(
+        winnowing_fingerprints(
+            df, text_col=text_col, id_col=id_col, k=k, w=w, portable=portable
+        )
     )
-    fp, fp_ids = tracked_local_checkpoint(fp_plan)
-    register_session_scoped(fp_ids)
     ex = fp.where(F.size("fingerprints") > 0).select(
         F.col("id").alias("doc_id"),
         F.size("fingerprints").alias("n_fp"),

@@ -385,13 +385,8 @@ def kmeans_iterations(
     loop — at corpus scale run a few iterations on a hash-sample, then
     assign the full corpus once.
     """
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint, release
 
-    spark = df.sparkSession
     seeds = (
         df.orderBy(id_col)
         .limit(k)
@@ -400,8 +395,7 @@ def kmeans_iterations(
             as_double(vec_col).alias("centroid"),
         )
     )
-    centroids, ids_cur = tracked_local_checkpoint(seeds)
-    ids_prev: set[int] = set()
+    prev, centroids = seeds, checkpoint(seeds)
     assignments = None
     for _ in range(iterations):
         # One scored pass serves BOTH outputs: the assignment kernel
@@ -419,7 +413,7 @@ def kmeans_iterations(
         if not cent_rows:  # empty corpus → empty seeds → empty rounds
             carried = carried.where(F.lit(False))
         assignments = carried.select(id_col, "assigned", "cosine_sim")
-        new_centroids, ids_new = tracked_local_checkpoint(
+        new_centroids = checkpoint(
             group_centroids(
                 carried.select(
                     F.col("assigned").alias("label"),
@@ -433,10 +427,8 @@ def kmeans_iterations(
         # now-superseded assignments plan — free them; keep the last TWO
         # rounds (returned `assignments` lazily reads its input centroids,
         # returned `centroids` is the newest checkpoint)
-        release(spark, ids_prev)
-        ids_prev, ids_cur = ids_cur, ids_new
-        centroids = new_centroids
-    register_session_scoped(ids_prev | ids_cur)
+        release(prev)
+        prev, centroids = centroids, new_centroids
     return assignments, centroids
 
 
@@ -556,9 +548,9 @@ def semantic_dedup_pairs(
     # rebuilt the full scan -> broadcast-centroid assignment -> agg chain,
     # doubling the corpus assignment pass). One eager checkpoint makes it
     # one pass; blocks are swept between queries by the session harness.
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
-    m = session_scoped_checkpoint(m)
+    m = checkpoint(m)
     a = m.alias("a")
     b = m.alias("b")
     pairs = a.join(
@@ -770,9 +762,9 @@ def contrastive_triplets(
     # assignment pass (scan -> broadcast-centroid score -> groupBy), so the
     # corpus was assigned ~7x per query. One eager checkpoint makes it one
     # pass; blocks are swept between queries by the session harness.
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
-    e = session_scoped_checkpoint(e)
+    e = checkpoint(e)
     a = e.select(
         "aid", *pair_keys, F.col("v").alias("av"), F.col("vn").alias("an")
     )
@@ -1003,13 +995,8 @@ def pq_train_codebooks(
     unroll reproduces the codebooks and codes bit-exactly. Production
     training stays unrounded (``None``).
     """
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint, release
 
-    spark = df.sparkSession
     subs = _pq_subvectors(df, m, vec_col, id_col)
     seeds = (
         subs.withColumn(
@@ -1024,8 +1011,7 @@ def pq_train_codebooks(
         )
         .withColumn("__cn2", sumsq(F.col("__cv")))
     )
-    cents, ids_cur = tracked_local_checkpoint(seeds)
-    ids_prev: set[int] = set()
+    prev, cents = seeds, checkpoint(seeds)
     for _ in range(iterations):
         assigned = _pq_assign(subs, cents, carry_vec=True, round_to=round_to)
         sum_x = (
@@ -1058,11 +1044,9 @@ def pq_train_codebooks(
             )
             .withColumn("__cn2", sumsq(F.col("__cv")))
         )
-        cents_new, ids_new = tracked_local_checkpoint(new_cents)
-        release(spark, ids_prev)
-        ids_prev, ids_cur = ids_cur, ids_new
-        cents = cents_new
-    register_session_scoped(ids_prev | ids_cur)
+        new_cents = checkpoint(new_cents)
+        release(prev)
+        prev, cents = cents, new_cents
     return cents.select(
         "s",
         F.col("__code").alias("code"),

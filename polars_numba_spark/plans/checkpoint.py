@@ -1,31 +1,39 @@
-"""Tracked eager local checkpoints: materialize-and-release for iterative
-DataFrame algorithms.
+"""One checkpoint lifecycle for iterative and multi-consumer DataFrame plans.
 
-``DataFrame.localCheckpoint(eager=True)`` truncates lineage by persisting
-the materialized rows as executor block-manager RDD blocks — but Spark
-keeps those blocks until the session dies. An iterative algorithm that
-checkpoints every round (connected components, parallel prefix scan)
-therefore leaks one working-set copy PER ROUND into the block manager; at
-cluster scale that is steady memory-pressure growth, and in a long bench
-session it degrades every later query (the round-2 driver-bench
-regression). These helpers pair each checkpoint with the block ids it
-created so superseded rounds can be freed the moment the next round is
-materialized.
+``checkpoint(df)`` takes an eager checkpoint and records the block id
+behind it in a process-wide registry; ``release(*frames)`` frees the blocks
+behind frames that ``checkpoint`` returned; ``release_session_checkpoints``
+sweeps whatever is still registered.
+
+Why a registry: ``DataFrame.localCheckpoint(eager=True)`` truncates lineage
+by persisting the materialized rows as executor block-manager RDD blocks,
+and Spark keeps those blocks until the session dies. An iterative algorithm
+that checkpoints every round (connected components, PageRank) would leak
+one working-set copy per round, which in a long session degrades every
+later query. So operators ``release`` a round the moment the next one has
+materialized, and a block the returned DataFrame still reads (or one left
+behind when an operator raises) stays registered until the caller, or a
+bench/gate harness between queries, calls ``release_session_checkpoints``.
 
 Only public-ish JVM surface is touched (``JavaSparkContext.
 getPersistentRDDs`` via the standard py4j gateway — the same map the Spark
-UI's Storage tab renders).
+UI's Storage tab renders), plus one private read — the checkpoint's
+``LogicalRDD`` id — which :func:`checkpoint` verifies against that map.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
-# Checkpoint ids created for DataFrames whose lifetime must extend past the
-# creating function (e.g. the parallel prefix scan's partition-stable input,
-# which the RETURNED DataFrame still reads). Bench/test harnesses call
-# release_session_checkpoints() between queries to sweep these.
-_SESSION_SCOPED: list[int] = []
+# Persistent-RDD ids of every local checkpoint not yet released.
+_REGISTRY: set[int] = set()
+_REGISTRY_LOCK = threading.Lock()
+# The block id rides on the Python DataFrame object checkpoint() returns.
+_BLOCK_ATTR = "_pns_checkpoint_block"
 
 # Plan-audit capture (r14): an eager checkpoint TRUNCATES lineage, so any
 # node upstream of it — including the scale-killer shapes the catalog-wide
@@ -60,15 +68,15 @@ def _persistent_ids(spark: SparkSession) -> set[int]:
     return {int(i) for i in jmap.keySet().toArray()}
 
 
-def _checkpoint_rdd_ids(out: DataFrame) -> set[int]:
-    """The persistent-RDD ids backing an eager localCheckpoint, read
-    DIRECTLY off the returned frame's LogicalRDD (verified: the
-    LogicalRDD's rdd id IS the persisted id). This replaces the r6-era
-    before/after diff of ``getPersistentRDDs`` — the diff was two JVM
-    map scans per checkpoint AND attributed ids wrongly when two threads
-    checkpoint concurrently (r15: the RRF face materializes its BM25 and
-    PageRank subtrees in parallel submitter threads)."""
-    return {int(out._jdf.queryExecution().analyzed().rdd().id())}
+def _checkpoint_rdd_id(out: DataFrame) -> int:
+    """The persistent-RDD id backing an eager localCheckpoint, read
+    directly off the returned frame's LogicalRDD (its rdd id IS the
+    persisted id). Unlike a before/after diff of ``getPersistentRDDs`` it
+    attributes ids correctly when two threads checkpoint concurrently
+    (the RRF face materializes its BM25 and PageRank subtrees in parallel
+    submitter threads). Private Catalyst surface: :func:`checkpoint`
+    verifies the result."""
+    return int(out._jdf.queryExecution().analyzed().rdd().id())
 
 
 def _checkpoint_mode() -> str:
@@ -79,19 +87,14 @@ def _checkpoint_mode() -> str:
     mode has a single "executor" whose loss kills the app anyway, so the
     default stays ``local``; cluster deployments set
     ``PNS_CHECKPOINT_MODE=reliable`` (plus ``PNS_CHECKPOINT_DIR`` or a
-    pre-set ``sparkContext.setCheckpointDir``) to route every tracked /
-    session-scoped checkpoint through Spark's reliable checkpoint (HDFS/
-    object-store backed, survives executor loss). See SCALE.md."""
-    import os
-
+    pre-set ``sparkContext.setCheckpointDir``) to route every checkpoint
+    through Spark's reliable checkpoint (HDFS/object-store backed,
+    survives executor loss). See SCALE.md."""
     return os.environ.get("PNS_CHECKPOINT_MODE", "local")
 
 
 def _reliable_checkpoint(df: DataFrame) -> DataFrame:
-    import os
-
-    spark = df.sparkSession
-    sc = spark.sparkContext
+    sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():
         ckdir = os.environ.get("PNS_CHECKPOINT_DIR")
         if not ckdir:
@@ -103,15 +106,14 @@ def _reliable_checkpoint(df: DataFrame) -> DataFrame:
     return df.checkpoint(eager=True)
 
 
-def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """Eagerly checkpoint ``df``; return (checkpointed df, the NEW
-    persistent-RDD ids backing it) so the caller can free them with
-    :func:`release` once the checkpoint is superseded. Default is
-    ``localCheckpoint`` (executor blocks, fast, non-replicated);
-    ``PNS_CHECKPOINT_MODE=reliable`` swaps in a reliable checkpoint for
-    cluster deployments (see :func:`_checkpoint_mode`) — the id-tracking
-    contract is unchanged (reliable checkpoints create no persistent-RDD
-    blocks, so the id set is simply empty and release() is a no-op).
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eagerly checkpoint ``df`` and register the block behind it.
+
+    Default is ``localCheckpoint`` (executor blocks, fast, non-replicated);
+    ``PNS_CHECKPOINT_MODE=reliable`` swaps in a reliable checkpoint (see
+    :func:`_checkpoint_mode`), which creates no block to register. Free
+    the block with :func:`release` once nothing reads the frame any more;
+    otherwise :func:`release_session_checkpoints` sweeps it.
 
     A checkpoint scan reports UnknownPartitioning and inherits the
     upstream AQE-coalesced block count, so byte-small frames materialize
@@ -126,17 +128,27 @@ def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
     Where narrow checkpoint reads genuinely serialize heavy compute, fix
     the CONSUMER with an explicit keyed repartition instead (see
     simhash_dedup_pairs' block-join widening, measured 6.3s → 3.0s)."""
-    spark = df.sparkSession
     if _PLAN_CAPTURE:
         _CAPTURED_QES.append(df._jdf.queryExecution())
     if _checkpoint_mode() == "reliable":
-        return _reliable_checkpoint(df), set()
+        return _reliable_checkpoint(df)
     out = df.localCheckpoint(eager=True)
-    return out, _checkpoint_rdd_ids(out)
+    rid = _checkpoint_rdd_id(out)
+    if not df.sparkSession.sparkContext._jsc.getPersistentRDDs().containsKey(rid):
+        caller = sys._getframe(1)
+        raise RuntimeError(
+            f"checkpoint at {caller.f_code.co_filename}:{caller.f_lineno} "
+            f"({caller.f_code.co_name}): LogicalRDD id {rid} is not a "
+            "persistent RDD — this Spark version no longer exposes the "
+            "local checkpoint's block id, so its blocks cannot be released"
+        )
+    with _REGISTRY_LOCK:
+        _REGISTRY.add(rid)
+    setattr(out, _BLOCK_ATTR, rid)
+    return out
 
 
-def release(spark: SparkSession, ids: set[int] | list[int]) -> None:
-    """Unpersist the given persistent-RDD ids (no-op for already-freed)."""
+def _unpersist(spark: SparkSession, ids) -> None:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for i in ids:
         rdd = jmap.get(i)
@@ -144,25 +156,25 @@ def release(spark: SparkSession, ids: set[int] | list[int]) -> None:
             rdd.unpersist()
 
 
-def register_session_scoped(ids: set[int] | list[int]) -> None:
-    """Record checkpoint ids whose blocks the caller's RETURNED DataFrame
-    still reads — to be swept between queries, not at function exit."""
-    _SESSION_SCOPED.extend(ids)
-
-
-def session_scoped_checkpoint(df: DataFrame) -> DataFrame:
-    """Checkpoint whose blocks must outlive the creating function (the
-    returned DataFrame reads them lazily). Ids are recorded session-wide;
-    harnesses sweep them between queries via
-    :func:`release_session_checkpoints`."""
-    out, ids = tracked_local_checkpoint(df)
-    _SESSION_SCOPED.extend(ids)
-    return out
+def release(*frames: DataFrame) -> None:
+    """Free the blocks behind frames :func:`checkpoint` returned. A frame
+    with no registered block (reliable mode, never checkpointed, already
+    released or swept) is a no-op."""
+    # vars(): DataFrame.__getattr__ would resolve a missing name as a column
+    ids = {vars(f).get(_BLOCK_ATTR) for f in frames}
+    with _REGISTRY_LOCK:
+        owned = ids & _REGISTRY
+        _REGISTRY.difference_update(owned)
+    if owned:
+        _unpersist(frames[0].sparkSession, owned)
 
 
 def release_session_checkpoints(spark: SparkSession) -> None:
-    """Free every session-scoped checkpoint registered so far. Safe only
-    BETWEEN queries (after the consuming DataFrame has been fully
-    evaluated); bench.py and the local gate call this per query."""
-    release(spark, list(_SESSION_SCOPED))
-    _SESSION_SCOPED.clear()
+    """Free every checkpoint still registered. Safe only BETWEEN queries
+    (after every frame reading a checkpoint has been fully evaluated);
+    bench.py, the perfbench harness and the local gates call this per
+    query."""
+    with _REGISTRY_LOCK:
+        ids = list(_REGISTRY)
+        _REGISTRY.clear()
+    _unpersist(spark, ids)

@@ -11,8 +11,6 @@ schemas aligned.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -736,26 +734,8 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``block_by="source"``); no pairwise join on a bare blocking key
     remains in the plan (pinned in test_plans.py)."""
     d = _t(spark, sf_dir, "documents")
-    toks = None
-    if os.environ.get("PNS_MINHASH_TOKS_CKPT") == "1":
-        # opt-in ONLY: the r15 A/B measured this face SLOWER with the
-        # shared checkpointed toks (4.42s → 5.06s wall floor) — unigram
-        # distinct-token derivation is ~0.5s of the face, so the
-        # checkpoint's materialize+read overhead exceeds the 2 saved
-        # re-tokenizations. Kept wired (and tested) for corpora whose
-        # tokenize pass is expensive; carries `source` for the banded
-        # block key. Result-identical by construction.
-        from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
-
-        toks = session_scoped_checkpoint(
-            d.select(
-                F.col("doc_id").alias("id"),
-                "source",
-                D._token_sets("text", None).alias("toks"),
-            ).withColumn("n_toks", F.size("toks"))
-        )
     cands = D.minhash_lsh_candidates(
-        d, num_hashes=16, bands=4, portable=True, block_by="source", toks=toks
+        d, num_hashes=16, bands=4, portable=True, block_by="source"
     )
     # verify_partitions: the banded candidate set here is large (~139k
     # verified pairs at sf0.1) and the verify is per-pair set arithmetic —
@@ -765,7 +745,6 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands,
         prune_threshold=0.8,
         verify_partitions=spark.sparkContext.defaultParallelism,
-        toks=toks,
     ).where(F.col("jaccard") >= 0.8)
 
 
@@ -1403,12 +1382,12 @@ def curated_corpus_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = d.select(
         "doc_id", "lang", "text", X.quality_score("text").alias("quality")
     ).where(F.col("quality") >= 0.5)
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     # verdict feeds both the cluster-size aggregate and the keep filter;
     # without materialization each side rescans documents and re-joins the
     # components checkpoint. One row per doc — tiny.
-    verdict = session_scoped_checkpoint(
+    verdict = checkpoint(
         D.minhash_dedup_pairs(
             scored, num_hashes=32, bands=8, threshold=0.9, portable=True,
             emit="keeplist",
@@ -1677,12 +1656,12 @@ def embedding_near_dup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     its full cap=1000."""
     cap = 500
     e = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < cap)
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     # exact feeds the semi-join AND the truth count; materialize the
     # all-pairs truth once (pair ids only) instead of re-scoring cap^2
     # cosines per consumer.
-    exact = session_scoped_checkpoint(
+    exact = checkpoint(
         _exact_pairs_capped(spark, sf_dir, cap=cap, threshold=0.4).select(
             "a_id", "b_id"
         )
@@ -1904,10 +1883,10 @@ def embedding_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = ivf_topk(e, q, cents, k=5, nprobe=3).select(
         F.col("query_id").alias("aq"), F.col("neighbor_id").alias("an")
     )
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     # exact feeds the semi-join AND the truth count; one brute-force pass.
-    exact = session_scoped_checkpoint(
+    exact = checkpoint(
         S.brute_force_topk(e, q, k=5).select("query_id", "neighbor_id")
     )
     hits = exact.join(
@@ -2580,11 +2559,11 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids_b = d.select(F.col("doc_id").alias("b_id"))
     allp = ids_a.crossJoin(ids_b).where(F.col("a_id") < F.col("b_id"))
     exact = D.jaccard_pairs(d, allp)
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     # cands feeds the truth-marking join AND the candidate count;
     # materialize the banded self-join's output once (pair ids only).
-    cands = session_scoped_checkpoint(
+    cands = checkpoint(
         D.minhash_lsh_candidates(
             d, num_hashes=32, bands=8, portable=True
         ).withColumn("__c", F.lit(1))
@@ -3010,7 +2989,7 @@ def embedding_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_train_codebooks,
     )
 
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     e = _t(spark, sf_dir, "embeddings")
     books = pq_train_codebooks(e, m=8, k=16, iterations=2)
@@ -3027,10 +3006,10 @@ def embedding_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with _cf.ThreadPoolExecutor(max_workers=2) as _ex:
         codes_f = _ex.submit(
-            lambda: session_scoped_checkpoint(pq_encode(e, books, m=8))
+            lambda: checkpoint(pq_encode(e, books, m=8))
         )
         exact_f = _ex.submit(
-            lambda: session_scoped_checkpoint(S.brute_force_topk(e, q, k=5))
+            lambda: checkpoint(S.brute_force_topk(e, q, k=5))
         )
         codes = codes_f.result()
         exact = exact_f.result()
@@ -3214,7 +3193,7 @@ def doc_search_authority_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from polars_numba_spark.operators.graphrank import pagerank
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     d = _t(spark, sf_dir, "documents")
 
@@ -3222,7 +3201,7 @@ def doc_search_authority_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without materialization each side replays the whole BM25 ranking
     # (measured: 2x the face's dominant CPU). Top-10-per-query rows — tiny.
     def _build_bm():
-        return session_scoped_checkpoint(
+        return checkpoint(
             X.bm25_topk(d, _BM25_QUERIES, k=10, k1=_BM25_K1, b=_BM25_B)
         )
 
@@ -3238,7 +3217,7 @@ def doc_search_authority_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges = occ.select(doc_node.alias("src"), term_node.alias("dst")).union(
             occ.select(term_node.alias("src"), doc_node.alias("dst"))
         )
-        return session_scoped_checkpoint(
+        return checkpoint(
             pagerank(edges, damping=0.85, iterations=3)
             .where(F.col("node").startswith("d:"))
             .select(

@@ -1439,13 +1439,13 @@ def order_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized, and the top-20 ships per-partition heads only
     (TakeOrderedAndProject). All ratios are single divisions of exact
     counts — hash-stable with no decimal tricks."""
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     l = _t(spark, sf_dir, "lineitem")
     # items feeds four consumers (order count, part supports, both pair
     # sides); materialize the scan+distinct once instead of replaying it
     # per consumer (no exchange reuse fires across these subtrees).
-    items = session_scoped_checkpoint(
+    items = checkpoint(
         l.select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
         ).distinct()
@@ -5364,14 +5364,14 @@ def part_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").alias("qty"),
         F.col("l_extendedprice").alias("ext"),
     )
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     # pw feeds the base-week basket AND the terms join; materialize the
     # (part, week) aggregate once (parts x weeks rows — tiny) instead of
     # replaying the lineitem scan+agg per consumer. The base-week MIN then
     # reads pw too (identical value — groupBy never drops a wk), removing
     # a third full lineitem scan.
-    pw = session_scoped_checkpoint(
+    pw = checkpoint(
         li.groupBy("pk", "wk").agg(
             (
                 F.expr("CAST(SUM(CAST(ext AS DECIMAL(18,6))) AS DOUBLE)")

@@ -1088,7 +1088,7 @@ def customer_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (d·10⁶ + id) so both engines compare identical scalars. Same fixed
     c_custkey slice as the golden-record face; all counts exact
     integers, one double division for the coefficient."""
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     c = _t(spark, sf_dir, "customer").where(F.col("c_custkey") < 1500)
     # The edge list feeds SEVEN consumer subtrees (deg twice via the
@@ -1099,7 +1099,7 @@ def customer_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replayed build (plans/r14/customer_graph_triangles_before.txt).
     # The materialized rows are two-bigint pairs — bounded by the match
     # graph, not the corpus.
-    e = session_scoped_checkpoint(
+    e = checkpoint(
         customer_name_fuzzy_pairs(spark, sf_dir)
         .where((F.col("a_key") < 1500) & (F.col("b_key") < 1500))
         .select(F.col("a_key").alias("a"), F.col("b_key").alias("b"))
@@ -1296,11 +1296,7 @@ def customer_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge⋈label join + one (node, label) count + one per-node argmax
     window, all keyed on node id; the label frame is localCheckpointed
     per round (the components-loop lineage pin)."""
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint, release
 
     c = _t(spark, sf_dir, "customer").where(F.col("c_custkey") < 1500)
     pairs = fuzzy_name_pairs(c).select(
@@ -1309,11 +1305,11 @@ def customer_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = pairs.unionByName(
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    und, e_ids = tracked_local_checkpoint(und)
+    und = checkpoint(und)
     lab = c.select(
         F.col("c_custkey").alias("id"), F.col("c_custkey").alias("lab")
     )
-    lab, l_ids = tracked_local_checkpoint(lab)
+    lab = checkpoint(lab)
     for _ in range(3):
         msgs = und.join(
             lab.select(F.col("id").alias("u"), "lab"), "u"
@@ -1325,14 +1321,13 @@ def customer_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("rn") == 1)
             .select("id", F.col("lab").alias("blab"))
         )
-        lab = lab.join(best, "id", "left").select(
-            "id", F.coalesce(F.col("blab"), F.col("lab")).alias("lab")
+        prev, lab = lab, checkpoint(
+            lab.join(best, "id", "left").select(
+                "id", F.coalesce(F.col("blab"), F.col("lab")).alias("lab")
+            )
         )
-        lab, new_ids = tracked_local_checkpoint(lab)
-        release(spark, l_ids)
-        l_ids = new_ids
-    release(spark, e_ids)
-    register_session_scoped(l_ids)
+        release(prev)
+    release(und)
     return lab.select("id", F.col("lab").alias("community"))
 
 

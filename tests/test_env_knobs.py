@@ -15,8 +15,6 @@ KNOBS = {
     "PNS_CASEFOLD",
     "PNS_CHECKPOINT_DIR",
     "PNS_CHECKPOINT_MODE",
-    "PNS_CONTAINMENT_CKPT",
-    "PNS_MINHASH_TOKS_CKPT",
     "PNS_SCAN_PARALLELIZE",
 }
 

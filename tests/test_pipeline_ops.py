@@ -1507,28 +1507,138 @@ def test_pagerank_star_graph_invariants(spark):
     assert out == out2
 
 
-def test_pagerank_releases_checkpoint_blocks(spark):
-    """PageRank must not leak block-manager blocks: superseded per-round
-    checkpoints are freed during the run, graph-side checkpoints at return,
-    and the final rank blocks are session-scoped (swept between queries by
-    the bench/gate harness) — the iterative-algorithm leak checkpoint.py
-    documents."""
+def _edges(spark):
+    return spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b")], "src string, dst string"
+    )
+
+
+def _vectors(spark):
+    rows = [(i, [1.0 + 0.01 * i, 0.02 * (i % 3), 0.5]) for i in range(10)] + [
+        (100 + i, [0.02 * (i % 3), 1.0 + 0.01 * i, 0.5]) for i in range(10)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _run_pagerank(spark):
     from polars_numba_spark.operators.graphrank import pagerank
+
+    return [pagerank(_edges(spark), iterations=3)]
+
+
+def _run_bfs_hops(spark):
+    from polars_numba_spark.operators.graphrank import bfs_hops
+
+    seeds = spark.createDataFrame([("a",)], "id string")
+    return [bfs_hops(_edges(spark), seeds, max_hops=3)]
+
+
+def _run_hits(spark):
+    from polars_numba_spark.operators.graphrank import hits
+
+    return list(hits(_edges(spark), iterations=3))
+
+
+def _run_connected_components(spark):
+    from polars_numba_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "a_id long, b_id long"
+    )
+    return [connected_components(edges)]
+
+
+def _run_connected_components_no_convergence(spark):
+    from polars_numba_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "a_id long, b_id long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, max_iterations=3)
+    return []
+
+
+def _run_kmeans(spark):
+    from polars_numba_spark.operators.vector import kmeans_iterations
+
+    return list(kmeans_iterations(_vectors(spark), k=2, iterations=3))
+
+
+def _run_pq_training(spark):
+    from polars_numba_spark.operators.vector import pq_train_codebooks
+
+    return [pq_train_codebooks(_vectors(spark), m=2, k=2, iterations=3)]
+
+
+def _add(a, b):
+    return a + b
+
+
+def _run_parallel_scan(spark):
+    from polars_numba_spark import collect_scan
+
+    df = spark.createDataFrame(
+        [(i % 7, i) for i in range(200)], "v long, ord long"
+    )
+    return [
+        collect_scan(
+            df, _add, 0, "long", column_names=["v"], order_by="ord",
+            combine=_add, num_partitions=4,
+        )
+    ]
+
+
+def _run_winnowing_pairs(spark):
+    from polars_numba_spark.operators.text import winnowing_overlap_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog again"),
+         (2, "the quick brown fox jumps over the lazy dog twice"),
+         (3, "an entirely unrelated sentence about something else")],
+        "doc_id long, text string",
+    )
+    return [winnowing_overlap_pairs(docs, k=4, w=2, portable=True)]
+
+
+# operator -> the checkpoint blocks its docstring/comments say stay live
+# while the returned frame is in use (everything else is freed in-call)
+_CHECKPOINTING_OPERATORS = {
+    "pagerank": (_run_pagerank, 1),  # the final rank vector
+    "bfs_hops": (_run_bfs_hops, 1),  # the final visited set
+    "hits": (_run_hits, 2),  # the final hub and authority vectors
+    "connected_components": (_run_connected_components, 1),  # final labels
+    # the raise path frees nothing itself: edge set + last labels remain
+    "connected_components_raises": (
+        _run_connected_components_no_convergence, 2,
+    ),
+    "kmeans": (_run_kmeans, 2),  # the last two centroid rounds
+    "pq_training": (_run_pq_training, 2),  # the last two codebook rounds
+    "parallel_scan": (_run_parallel_scan, 1),  # the partition-stable input
+    "winnowing_pairs": (_run_winnowing_pairs, 1),  # the fingerprint table
+}
+
+
+@pytest.mark.parametrize("op", sorted(_CHECKPOINTING_OPERATORS))
+def test_operator_releases_checkpoint_blocks(spark, op):
+    """No checkpointing operator leaks block-manager blocks: superseded
+    rounds and inputs the result no longer reads are freed during the
+    call, the blocks the result still reads stay within the documented
+    count, and release_session_checkpoints leaves nothing behind — also
+    when the operator raises (the iterative-algorithm leak checkpoint.py
+    documents)."""
     from polars_numba_spark.plans.checkpoint import (
         _persistent_ids,
         release_session_checkpoints,
     )
 
+    run, documented = _CHECKPOINTING_OPERATORS[op]
     release_session_checkpoints(spark)
     before = _persistent_ids(spark)
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b")], "src string, dst string"
-    )
-    out = pagerank(edges, iterations=3)
-    assert out.count() == 3
-    mid = _persistent_ids(spark) - before
-    # only the final rank checkpoint may remain while the result is live
-    assert len(mid) <= 2, mid
+    for out in run(spark):
+        assert out.count() > 0
+    live = _persistent_ids(spark) - before
+    assert len(live) <= documented, live
     release_session_checkpoints(spark)
     assert _persistent_ids(spark) - before == set()
 

@@ -141,7 +141,7 @@ def test_checkpoint_truncated_subtree_is_still_audited(spark):
     went stale and was deleted — the stale-waiver check firing as
     designed), so the pin now uses a synthetic face whose checkpoint
     hides a non-equi self-join."""
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.plans.checkpoint import checkpoint
 
     def synthetic(s, sf):
         # UNBOUNDED scans (the prover tolerates a provably-small side like
@@ -150,7 +150,7 @@ def test_checkpoint_truncated_subtree_is_still_audited(spark):
         d = s.read.parquet(f"{sf}/documents.parquet")
         a = d.select(F.col("doc_id").alias("a"))
         b = d.select(F.col("doc_id").alias("b"))
-        hidden = session_scoped_checkpoint(a.join(b, F.col("a") < F.col("b")))
+        hidden = checkpoint(a.join(b, F.col("a") < F.col("b")))
         return hidden.groupBy().count()
 
     assert _audit_plan(synthetic(spark, SF)) == []  # the blind spot
